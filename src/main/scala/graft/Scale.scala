@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale rehearsal: replicates the sf0.1 tables N× (ids shifted so keys stay
@@ -58,18 +58,22 @@ constant in core count by construction.
 
 ## 100 TB cluster conf recipe
 
-The engine's mains (Bench/Verify/Scale) set these explicitly; a cluster
-deployment should carry them over and scale the sizes:
+Every main builds its session through `graft.GraftSession`; a cluster
+deployment should carry its settings over and scale the sizes. AQE, its
+skew-join split and 64 MB advisory partitions are Spark defaults, so they
+need no line:
 
 ```
-spark.sql.adaptive.enabled=true                  # runtime re-planning
-spark.sql.adaptive.skewJoin.enabled=true         # split hot partitions
-spark.sql.adaptive.advisoryPartitionSizeInBytes=64m
 spark.sql.shuffle.partitions=<2-3x total executor cores>
 spark.sql.files.maxPartitionBytes=128m           # scan-side task sizing
 spark.sql.codegen.cache.maxEntries=5000          # see below
-spark.sql.extensions=graft.plans.GraftExtensions # bbox scan pushdown rule
+spark.sql.extensions=graft.plans.GraftExtensions # the engine's Catalyst rules
 ```
+
+`spark.sql.extensions` is the only way the engine's rules (bbox scan
+pushdown, geometry fusion, auto-planned spatial joins) reach a session;
+`spark.sql.optimizer.excludedRules=graft.plans.AutoSpatialJoin` switches
+one off.
 
 `codegen.cache.maxEntries`: the default 100-entry generated-class cache
 thrashes on a many-operator pipeline (one heavy pair-join query alone
@@ -141,20 +145,8 @@ where distinct sigs << rows) sits far below it.
 
   def main(args: Array[String]): Unit = {
     val sf = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // explicit AQE skew posture — the 100 TB conf recipe (SCALE.md)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
-      // default-100 codegen cache thrashes on many-operator plans (Bench note)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val spark = GraftSession.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.plans.BboxFastPath.install(spark)
     import graft.functions.GeoFunctions._
 
     def pts(mult: Int): DataFrame = {
@@ -691,7 +683,6 @@ where distinct sigs << rows) sits far below it.
     // cell explode, cached refine) from the shared grid machinery.
     if (onlyOp.forall(o => "auto predicate join stored".contains(o) ||
         "sjoin grid stored".contains(o))) {
-      graft.plans.AutoSpatialJoin.install(spark)
       val asjTmp = java.nio.file.Files.createTempDirectory("graft_scale_asj").toString
       cells.select(col("n_nationkey"), col("geometry").as("cell_geom"))
         .write.mode("overwrite").parquet(s"$asjTmp/cells")

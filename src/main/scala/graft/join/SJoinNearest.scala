@@ -293,7 +293,7 @@ object SJoinNearest {
       .na.drop(Seq(rGeomName)).collect()
       .map(r => (r.getLong(0), r.getAs[Array[Byte]](1)))
     val bc = spark.sparkContext.broadcast(rows)
-    val bcId = bc.id
+    val treeKey = BroadcastTreeCache.key(spark.sparkContext, bc)
     val maxD = maxDistance.getOrElse(Double.PositiveInfinity)
     val excl = exclusive
 
@@ -301,7 +301,7 @@ object SJoinNearest {
     val nearestU = udf((g: Array[Byte]) => {
       if (g == null) Array.empty[(Long, Double)]
       else {
-        val idx = BroadcastTreeCache.get(bcId, bc.value)
+        val idx = BroadcastTreeCache.get(treeKey, bc.value)
         if (idx.ids.isEmpty) Array.empty[(Long, Double)]
         else {
           val geom = Wkb.read(g)

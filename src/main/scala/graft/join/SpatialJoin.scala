@@ -226,7 +226,7 @@ object SpatialJoin {
       .collect()
       .map(r => (r.getLong(0), r.getAs[Array[Byte]](1)))
     val bc: Broadcast[Array[(Long, Array[Byte])]] = spark.sparkContext.broadcast(rows)
-    val bcId = bc.id
+    val treeKey = BroadcastTreeCache.key(spark.sparkContext, bc)
     val pred = predicate
     val dist = distance
     val bIsRight = buildRight
@@ -238,7 +238,7 @@ object SpatialJoin {
     val matchU = udf((g: Array[Byte]) => {
       if (g == null) Array.empty[Long]
       else {
-        val idx = BroadcastTreeCache.get(bcId, bc.value)
+        val idx = BroadcastTreeCache.get(treeKey, bc.value)
         val geom = Wkb.read(g)
         val env = new Envelope(geom.getEnvelopeInternal)
         if (pred == "dwithin") env.expandBy(dist)
@@ -545,25 +545,40 @@ object BroadcastTreeCache {
       prep.computeIfAbsent(i, (k: Int) => PreparedGeometryFactory.prepare(geom(k)))
   }
 
-  /** Bound on retained trees per JVM. Broadcast ids are monotonically
-    * increasing, so FIFO eviction == least-recently-created — a long session
+  /** Cache key: broadcast ids restart at 0 with every SparkContext, so a
+    * JVM that runs several contexts in turn (local mode) needs the context
+    * in the key too, or a later context would probe an earlier one's tree. */
+  final case class Key(context: Long, broadcast: Long)
+
+  private val contexts = new java.util.WeakHashMap[org.apache.spark.SparkContext, java.lang.Long]()
+  private val nextContext = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Build on the driver, once per broadcast, and capture in the closure. */
+  def key(sc: org.apache.spark.SparkContext, bc: org.apache.spark.broadcast.Broadcast[_]): Key =
+    contexts.synchronized {
+      Key(contexts.computeIfAbsent(sc, _ => java.lang.Long.valueOf(nextContext.incrementAndGet()))
+        .longValue, bc.id)
+    }
+
+  /** Bound on retained trees per JVM. Keys are created in increasing
+    * order, so FIFO eviction == least-recently-created — a long session
     * issuing thousands of broadcast sjoins no longer leaks STRtrees and
     * prepared geometries. Reads stay on the lock-free CHM fast path (the
     * cache is probed once per stream ROW, so a synchronized LRU map would
     * contend across all task threads). */
   private val MaxEntries = 64
-  private val cache = new java.util.concurrent.ConcurrentHashMap[Long, IndexData]()
-  private val order = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
+  private val cache = new java.util.concurrent.ConcurrentHashMap[Key, IndexData]()
+  private val order = new java.util.concurrent.ConcurrentLinkedQueue[Key]()
 
-  def get(bcId: Long, rows: => Array[(Long, Array[Byte])]): IndexData = {
-    val existing = cache.get(bcId)
+  def get(key: Key, rows: => Array[(Long, Array[Byte])]): IndexData = {
+    val existing = cache.get(key)
     if (existing != null) return existing
-    val built = cache.computeIfAbsent(bcId, (k: Long) => { order.add(k); new IndexData(rows) })
+    val built = cache.computeIfAbsent(key, (k: Key) => { order.add(k); new IndexData(rows) })
     var guard = 0
     while (cache.size() > MaxEntries && guard < 1024) {
       val old = order.poll()
       if (old == null) return built
-      if (old.longValue() == bcId) order.add(old) // never evict the entry just built
+      if (old == key) order.add(old) // never evict the entry just built
       else cache.remove(old)
       guard += 1
     }

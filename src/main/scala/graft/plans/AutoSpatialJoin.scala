@@ -7,8 +7,10 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.GraftColumnBridge.{column => exprCol, ofRows}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans._
-import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.optimizer.RewritePredicateSubquery
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreePattern
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, DoubleType}
 
@@ -55,7 +57,10 @@ import org.apache.spark.sql.types.{BinaryType, DoubleType}
   *    naive plan (their predicate is never true).
   *  - '''LeftSemi/LeftAnti''': the stamped left side semi-/anti-joins the
   *    matched id set — this is the plan `WHERE [NOT] EXISTS (… st_*)`
-  *    spellings reach after Spark's subquery rewrite.
+  *    spellings reach after Spark's subquery rewrite. That rewrite
+  *    (`RewritePredicateSubquery`) runs only after the operator batch this
+  *    rule lives in, so the rule applies it itself, first, to any Filter
+  *    whose correlated EXISTS carries a spatial conjunct.
   *  - FullOuter is left on Spark's plan (no known workload spells a full
   *    outer spatial join; the explicit API covers left/right).
   *
@@ -66,10 +71,10 @@ import org.apache.spark.sql.types.{BinaryType, DoubleType}
   * with `d` a foldable double and `l`/`r` deterministic binary expressions
   * each referencing exactly one side. When several conjuncts match, the
   * FIRST drives the grid; the rest are replayed raw in the refine.
-  * Constructed-geometry conditions never reach this rule: [[GeomSimplify]]
-  * runs earlier in the batch and fuses them to pure arithmetic (where a
-  * nested loop is cheap per pair); this rule is the complementary path for
-  * geometries that exist only as stored WKB.
+  * Constructed-geometry conditions never reach this rule: [[GeomSimplify]],
+  * injected before it in the same batch, fuses them to pure arithmetic
+  * (where a nested loop is cheap per pair); this rule is the complementary
+  * path for geometries that exist only as stored WKB.
   *
   * Row-level semantics of the candidate stage, checked against the refine:
   * a NULL geometry has NULL bounds and is dropped — the predicate would be
@@ -84,9 +89,9 @@ import org.apache.spark.sql.types.{BinaryType, DoubleType}
   * memoized per (canonicalized children, normalized geometry exprs, expand)
   * in a bounded LRU, so `.explain()` + execution, re-executions of the same
   * DataFrame, and AQE re-optimizations pay the jobs ONCE (staleness is
-  * performance-only: `cellsFor`/`cellOf` clamp into any grid). Set
-  * [[EnabledConf]] to false for plan-stability-sensitive sessions — the
-  * rule then leaves every join on Spark's plan.
+  * performance-only: `cellsFor`/`cellOf` clamp into any grid). Sessions
+  * that need Spark's own plan exclude the rule with
+  * `spark.sql.optimizer.excludedRules=graft.plans.AutoSpatialJoin`.
   */
 object AutoSpatialJoin extends Rule[LogicalPlan] {
 
@@ -97,26 +102,11 @@ object AutoSpatialJoin extends Rule[LogicalPlan] {
     * rewritten again. */
   private[graft] val P = "__graft_asj"
 
-  /** Session conf: set to "false" to disable the rewrite (the rule becomes
-    * a no-op and predicate joins keep Spark's nested-loop plan). */
-  val EnabledConf = "spark.graft.autoSpatialJoin.enabled"
-
   /** Counts grid-stats builds (memo misses, shared with the explicit grid
     * sjoin) — observability for tests and tuning: explain + execute of one
     * query must increment this once. */
   private[graft] def gridStatsBuilds: java.util.concurrent.atomic.AtomicLong =
     graft.join.GridMemo.statsBuilds
-
-  /** Append to a live session, after [[GeomSimplify]] (constructed-geometry
-    * join conditions must fuse to arithmetic before this rule looks for the
-    * stored-geometry shape); cluster deployments get the same order from
-    * `graft.plans.GraftExtensions`. */
-  def install(spark: SparkSession): Unit = {
-    GeomSimplify.install(spark)
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
-  }
 
   private def splitConjuncts(e: Expression): Seq[Expression] = e match {
     case And(a, b) => splitConjuncts(a) ++ splitConjuncts(b)
@@ -209,9 +199,25 @@ object AutoSpatialJoin extends Rule[LogicalPlan] {
     case _ => false
   }
 
+  private def isSpatial(e: Expression): Boolean = e match {
+    case _: StIntersects | _: StContains | _: StWithin | _: StTouches |
+         _: StCrosses | _: StOverlaps | _: StCovers | _: StCoveredBy |
+         _: StDWithin | _: StDistance => true
+    case _ => false
+  }
+
+  /** Lower `WHERE [NOT] EXISTS (… st_* …)` to its semi/anti/existence join
+    * now, with Catalyst's own rewrite, so the join match below sees it. */
+  private def rewriteSpatialExists(plan: LogicalPlan): LogicalPlan =
+    plan.transformWithPruning(_.containsPattern(TreePattern.EXISTS_SUBQUERY)) {
+      case f @ Filter(cond, _) if cond.exists {
+          case e: Exists => e.joinCond.exists(_.exists(isSpatial))
+          case _ => false
+        } => RewritePredicateSubquery(f)
+    }
+
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!conf.getConfString(EnabledConf, "true").toBoolean) plan
-    else plan transform {
+    rewriteSpatialExists(plan) transform {
       case j @ Join(left, right, jt, Some(cond), _)
           if rewritableType(jt) && !j.isStreaming && cond.deterministic &&
             // subqueries were already planned in place — don't replicate them

@@ -2,7 +2,6 @@ package graft.plans
 
 import graft.functions.expr.{StContains, StDWithin, StIntersects, StWithin}
 import graft.geom.Wkb
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -23,21 +22,13 @@ import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, StructType}
   * filtered geometry is the sole binary column of a frame that carries a
   * spec-shaped `bbox` struct (the GeoParquet covering layout this engine
   * writes), which ties the bbox column to that geometry unambiguously.
-  * Idempotent: conjuncts already present (semantically) are not re-added.
+  * Idempotent: conjuncts already present (semantically) are not re-added,
+  * which the operator-optimization batch's fixed point relies on.
+  *
+  * Reaches a session only through [[GraftExtensions]]
+  * (`spark.sql.extensions`), which [[graft.GraftSession]] sets.
   */
 object BboxFastPath extends Rule[LogicalPlan] {
-
-  /** Append the engine's Catalyst rules (this one + [[GeomSimplify]]) to a
-    * LIVE session's extra optimizations (tests, engine session builders).
-    * Cluster deployments can instead set
-    * `spark.sql.extensions=graft.plans.GraftExtensions`. */
-  def install(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
-    GeomSimplify.install(spark)
-    AutoSpatialJoin.install(spark)
-  }
 
   private def isBboxStruct(dt: DataType): Boolean = dt match {
     case s: StructType => Seq("xmin", "ymin", "xmax", "ymax").forall(n =>
@@ -132,8 +123,14 @@ object BboxFastPath extends Rule[LogicalPlan] {
   }
 }
 
-/** `spark.sql.extensions` entry point registering the engine's Catalyst
-  * rules on session build. */
+/** `spark.sql.extensions` entry point: the only way the engine's Catalyst
+  * rules reach a session. Injected rules join Catalyst's operator-
+  * optimization batch, so Catalyst's own rewrites (ConstantFolding,
+  * ColumnPruning, CollapseProject, predicate pushdown) run around them to a
+  * fixed point. Set by [[graft.GraftSession]]; a cluster deployment sets
+  * `spark.sql.extensions=graft.plans.GraftExtensions` itself, and
+  * `spark.sql.optimizer.excludedRules=graft.plans.AutoSpatialJoin` (or any
+  * of the three rule names) switches a rule off per session. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => BboxFastPath)

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -34,15 +33,13 @@ import graft.functions.expr.{StArea, StBoxArea, StBoxContainsBox, StBoxIntersect
   * NULL operand; the coordinate projections add an explicit guard on the
   * dropped coordinate). Fires only when BOTH operands are literal StPoint
   * constructions in the same expression tree — a WKB column read from
-  * storage is never touched. */
+  * storage is never touched.
+  *
+  * Injected by [[GraftExtensions]] into Catalyst's operator-optimization
+  * batch, so Catalyst's rewrites run on this rule's output in the same
+  * fixed point: every rewrite must be idempotent, and any choice it
+  * encodes must survive Catalyst's folding (see `fuseTotalBounds`). */
 object GeomSimplify extends Rule[LogicalPlan] {
-
-  /** Append to a live session (same idiom as [[BboxFastPath.install]]);
-    * cluster deployments get both rules via `graft.plans.GraftExtensions`. */
-  def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
 
   private def dist(ax: Expression, ay: Expression,
                    bx: Expression, by: Expression): Expression =
@@ -50,8 +47,8 @@ object GeomSimplify extends Rule[LogicalPlan] {
 
   /** A box-family operand: an StMakeBox construction, an StPoint (the
     * degenerate box), or a CONSTANT WKB literal that is provably
-    * box-equivalent — ConstantFolding runs before extraOptimizations, so
-    * `st_makebox(1, 1, 9, 9)` reaches this rule as a binary literal. A
+    * box-equivalent — ConstantFolding runs ahead of this rule in the same
+    * batch, so `st_makebox(1, 1, 9, 9)` reaches it as a binary literal. A
     * literal qualifies when its point set equals its closed envelope
     * (equalsTopo against the canonical box — topological predicates depend
     * only on point sets, so corner substitution is exact) and every corner
@@ -152,10 +149,10 @@ object GeomSimplify extends Rule[LogicalPlan] {
     * geometry expressions, and keeps the substitution ONLY where a fusion
     * pattern then fires — a reference that does not fuse keeps reading the
     * child's column, so construction work is never duplicated. Aliases left
-    * dead by fusion are pruned from the child (extraOptimizations run after
-    * Catalyst's ColumnPruning, which would otherwise keep computing them);
-    * grandchild attributes the fused arithmetic now needs are passed
-    * through, with a safe bail-out if they are not available. */
+    * dead by fusion are dropped by Catalyst's ColumnPruning, which runs
+    * after this rule in the same fixed-point batch; grandchild attributes
+    * the fused arithmetic now needs are passed through, with a safe
+    * bail-out if they are not available. */
   private def constructedDefs(childList: Seq[NamedExpression]): Map[ExprId, Expression] =
     childList.collect {
       // deterministic only: substitution re-evaluates the construction at
@@ -192,8 +189,7 @@ object GeomSimplify extends Rule[LogicalPlan] {
     plan transform {
       // Project over Filter over Project — the filter shape
       // (`withColumn(box).filter(st_intersects(box, …)).select(…)`): fuse in
-      // both the condition and the projection, then prune aliases the fusion
-      // left dead from the bottom Project (the Filter is transparent).
+      // both the condition and the projection (the Filter is transparent).
       case p @ Project(list, Filter(cond, child @ Project(childList, grandchild))) =>
         val defs = constructedDefs(childList)
         if (defs.isEmpty) p
@@ -203,11 +199,10 @@ object GeomSimplify extends Rule[LogicalPlan] {
           if (!fc && !fusedList.exists(_._2)) p
           else {
             val newList = fusedList.map(_._1.asInstanceOf[NamedExpression])
-            val needed = AttributeSet(newList.flatMap(_.references)) ++ newCond.references
-            val keptChild = childList.filter(ne => needed.contains(ne.toAttribute))
-            val passThrough = (needed -- AttributeSet(keptChild.map(_.toAttribute))).toSeq
+            val passThrough =
+              (AttributeSet(newList.flatMap(_.references)) ++ newCond.references -- child.outputSet).toSeq
             if (!AttributeSet(passThrough).subsetOf(grandchild.outputSet)) p
-            else Project(newList, Filter(newCond, Project(keptChild ++ passThrough, grandchild)))
+            else Project(newList, Filter(newCond, Project(childList ++ passThrough, grandchild)))
           }
         }
       case p @ Project(list, child @ Project(childList, grandchild)) =>
@@ -218,11 +213,9 @@ object GeomSimplify extends Rule[LogicalPlan] {
           if (!fusedList.exists(_._2)) p
           else {
             val newList = fusedList.map(_._1.asInstanceOf[NamedExpression])
-            val needed = AttributeSet(newList.flatMap(_.references))
-            val keptChild = childList.filter(ne => needed.contains(ne.toAttribute))
-            val passThrough = (needed -- AttributeSet(keptChild.map(_.toAttribute))).toSeq
+            val passThrough = (AttributeSet(newList.flatMap(_.references)) -- child.outputSet).toSeq
             if (!AttributeSet(passThrough).subsetOf(grandchild.outputSet)) p // can't resolve — bail
-            else Project(newList, Project(keptChild ++ passThrough, grandchild))
+            else Project(newList, Project(childList ++ passThrough, grandchild))
           }
         }
       // bare Filter directly over the constructing Project (no Project above
@@ -311,7 +304,7 @@ object GeomSimplify extends Rule[LogicalPlan] {
     *    EXCEPT at ±0.0 ties, where Spark's comparison treats -0.0 == 0.0
     *    and keeps whichever arrived first (order-dependent!) while
     *    math.min deterministically yields -0.0 (math.max +0.0). The
-    *    rewrite carries tiny any-(-0.0)/any-(+0.0) flag aggregates per
+    *    rewrite carries a min/max over each zero's sign witness (±Inf) per
     *    axis and rewrites a zero-valued min/max to the sign math.min/max
     *    would produce;
     *  - an all-null/all-empty group yields the kernel's
@@ -341,20 +334,19 @@ object GeomSimplify extends Rule[LogicalPlan] {
       // DIVIDE_BY_ZERO even under a guarding And — subexpression
       // elimination hoists the division)
       def invOf(v: Expression): Expression = Pow(v, Literal(-1.0, DoubleType))
-      def negZero(v: Expression): Expression =
-        And(EqualTo(v, zero), LessThan(invOf(v), zero))
-      def posZero(v: Expression): Expression =
-        And(EqualTo(v, zero), GreaterThan(invOf(v), zero))
       def field(vals: Expression, isMin: Boolean): Expression = {
         val m = aggE(if (isMin) Min(vals) else Max(vals))
         // a zero-valued extreme gets the sign math.min/max would fold to:
         // min is −0.0 iff ANY contributing −0.0 exists, max +0.0 iff any
-        // +0.0 — Spark's ordering Min/Max ties ±0.0 order-dependently
-        val flag = aggE(Max(if (isMin) negZero(vals) else posZero(vals)))
-        val zeroFixed =
-          If(flag, Literal(if (isMin) -0.0 else 0.0, DoubleType),
-            Literal(if (isMin) 0.0 else -0.0, DoubleType))
-        If(EqualTo(m, zero), zeroFixed, m)
+        // +0.0 — Spark's ordering Min/Max ties ±0.0 order-dependently.
+        // The zeros' witnesses ±Inf fold through the same Min/Max and
+        // pow(±Inf, −1) maps the winner back to ±0.0. No literal −0.0/0.0
+        // branch appears: Literal(-0.0) equals Literal(0.0), so Catalyst's
+        // PushFoldableIntoBranches + SimplifyConditionals would fold such a
+        // choice to one branch and lose the sign.
+        val zeroInv = If(EqualTo(vals, zero), invOf(vals), Literal(null, DoubleType))
+        val signedZero = invOf(aggE(if (isMin) Min(zeroInv) else Max(zeroInv)))
+        If(EqualTo(m, zero), signedZero, m)
       }
       // the kernel's finish() reports the all-NaN "empty" result whenever
       // the folded xmin is +Inf — that conflates the genuinely-empty group
@@ -400,15 +392,13 @@ object GeomSimplify extends Rule[LogicalPlan] {
           val needed = AttributeSet(newAes.flatMap(_.references)) ++
             AttributeSet(gs.flatMap(_.references))
           child match {
-            // inlining exposed grandchild coordinate columns: keep the child
-            // aliases still referenced, pass raw coordinates through, and
-            // prune the now-dead construction (same posture as the
-            // cross-Project fusion above)
-            case Project(cl, g) =>
-              val kept = cl.filter(ne => needed.contains(ne.toAttribute))
-              val passThrough = (needed -- AttributeSet(kept.map(_.toAttribute))).toSeq
+            // inlining exposed grandchild coordinate columns: pass them
+            // through the child (ColumnPruning then drops the now-dead
+            // construction, as for the cross-Project fusion above)
+            case p @ Project(cl, g) =>
+              val passThrough = (needed -- p.outputSet).toSeq
               if (!AttributeSet(passThrough).subsetOf(g.outputSet)) agg // can't resolve — bail
-              else Aggregate(gs, newAes, Project(kept ++ passThrough, g), hint)
+              else Aggregate(gs, newAes, Project(cl ++ passThrough, g), hint)
             case other =>
               if (!needed.subsetOf(other.outputSet)) agg
               else Aggregate(gs, newAes, other, hint)

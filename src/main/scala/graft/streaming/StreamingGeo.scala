@@ -55,13 +55,13 @@ object StreamingGeo {
       .na.drop(Seq(staticGeom)).collect()
       .map(r => (r.getLong(0), r.getAs[Array[Byte]](1)))
     val bc = spark.sparkContext.broadcast(rows)
-    val bcId = bc.id
+    val treeKey = BroadcastTreeCache.key(spark.sparkContext, bc)
     val pred = predicate
 
     val matchU = udf((g: Array[Byte]) => {
       if (g == null) Array.empty[Long]
       else {
-        val idx = BroadcastTreeCache.get(bcId, bc.value)
+        val idx = BroadcastTreeCache.get(treeKey, bc.value)
         val geom = Wkb.read(g)
         val cands = idx.tree.query(geom.getEnvelopeInternal)
         val out = new scala.collection.mutable.ArrayBuffer[Long](4)

@@ -546,8 +546,7 @@ class GeoJsonSpec extends AnyFunSuite {
   }
 }
 
-class GeoDataFrameSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class GeoDataFrameSpec extends SparkSuite {
   import spark.implicits._
 
   private def gdf = {
@@ -733,8 +732,7 @@ class GeoDataFrameSpec extends AnyFunSuite {
   }
 }
 
-class PipelineOpsSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class PipelineOpsSpec extends SparkSuite {
   import spark.implicits._
 
   test("approx BPE token count: words + punctuation runs counted separately") {

@@ -8,7 +8,6 @@ import graft.plans.AutoSpatialJoin
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.locationtech.jts.geom.Geometry
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The AutoSpatialJoin rewrite: a plain predicate join over STORED geometry
   * columns plans as the grid candidate join (no nested loop), and because
@@ -17,11 +16,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * results are identical to both the nested-loop semantics (brute-force JTS
   * ground truth) and the explicit `SpatialJoin.sjoin` API, across
   * inner/outer/semi/anti join types. */
-class AutoSpatialJoinSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class AutoSpatialJoinSpec extends SparkSuite {
   import spark.implicits._
 
-  private def installed(): Unit = AutoSpatialJoin.install(spark)
+  /** The kill switch: Spark's `spark.sql.optimizer.excludedRules` by name. */
+  private val Rule = "graft.plans.AutoSpatialJoin"
+
 
   private def ptsDf(n: Int, seed: Int): (DataFrame, Seq[(Int, Geometry)]) = {
     val rng = new scala.util.Random(seed)
@@ -48,7 +48,6 @@ class AutoSpatialJoinSpec extends AnyFunSuite {
   }
 
   test("st_intersects predicate join: grid plan, results equal brute force and sjoin") {
-    installed()
     val (pts, ptRows) = ptsDf(400, 7)
     val (boxes, boxRows) = boxDf(25, 8)
     val q = pts.join(boxes, st_intersects(col("ga"), col("gb"))).select("pid", "bid")
@@ -68,7 +67,6 @@ class AutoSpatialJoinSpec extends AnyFunSuite {
   }
 
   test("st_dwithin and st_distance<=d forms rewrite with bbox expansion") {
-    installed()
     val (a, aRows) = ptsDf(200, 11)
     val b0 = ptsDf(200, 12)
     val (b, bRows) = (b0._1.withColumnRenamed("ga", "gb").withColumnRenamed("pid", "bid"), b0._2)
@@ -93,7 +91,6 @@ class AutoSpatialJoinSpec extends AnyFunSuite {
   }
 
   test("st_contains with right-side geometry as first operand (swapped sides)") {
-    installed()
     val (pts, ptRows) = ptsDf(300, 21)
     val (boxes, boxRows) = boxDf(20, 22)
     val q = pts.join(boxes, st_contains(col("gb"), col("ga"))).select("pid", "bid")
@@ -105,7 +102,6 @@ class AutoSpatialJoinSpec extends AnyFunSuite {
   }
 
   test("every bbox-implied predicate rewrites: touches/crosses/overlaps/covers/covered_by") {
-    installed()
     val gf = new org.locationtech.jts.geom.GeometryFactory()
     // lattice boxes: neighbours share edges (touches), big cells cover the
     // small boxes planted inside them, random segments cross cells, and
@@ -159,7 +155,6 @@ class AutoSpatialJoinSpec extends AnyFunSuite {
   }
 
   test("extra conjuncts ride along; NULL and EMPTY geometries drop like the naive plan") {
-    installed()
     val gf = new org.locationtech.jts.geom.GeometryFactory()
     val rng = new scala.util.Random(31)
     val ptRows = (0 until 150).map(i => (i, GeomOps.point(rng.nextDouble() * 50, rng.nextDouble() * 50)))
@@ -178,7 +173,6 @@ class AutoSpatialJoinSpec extends AnyFunSuite {
   }
 
   test("two spatial conjuncts: the first drives the grid, the second is refine-replayed") {
-    installed()
     val (pts, ptRows) = ptsDf(250, 61)
     val (boxes, boxRows) = boxDf(20, 62)
     val q = pts.join(boxes,
@@ -194,7 +188,6 @@ class AutoSpatialJoinSpec extends AnyFunSuite {
   }
 
   test("SQL spelling: JOIN ON st_intersects over stored WKB plans as the grid join") {
-    installed()
     GeoFunctions.registerAll(spark)
     val (pts, ptRows) = ptsDf(250, 41)
     val (boxes, boxRows) = boxDf(15, 42)
@@ -210,7 +203,6 @@ class AutoSpatialJoinSpec extends AnyFunSuite {
   }
 
   test("LEFT OUTER predicate join rewrites: null-extension, NULL/EMPTY outer rows survive") {
-    installed()
     val gf = new org.locationtech.jts.geom.GeometryFactory()
     val (pts0, ptRows) = ptsDf(200, 71)
     // NULL and EMPTY left geometries: predicate never true → must come back
@@ -240,7 +232,6 @@ class AutoSpatialJoinSpec extends AnyFunSuite {
   }
 
   test("RIGHT OUTER predicate join rewrites symmetrically") {
-    installed()
     val (pts, ptRows) = ptsDf(150, 81)
     // boxes far outside the point domain never match → null-extended
     val boxRows = (0 until 10).map { k =>
@@ -261,7 +252,6 @@ class AutoSpatialJoinSpec extends AnyFunSuite {
   }
 
   test("LEFT SEMI and LEFT ANTI predicate joins rewrite (the EXISTS spelling)") {
-    installed()
     GeoFunctions.registerAll(spark)
     val gf = new org.locationtech.jts.geom.GeometryFactory()
     val (pts0, ptRows) = ptsDf(180, 91)
@@ -295,7 +285,6 @@ class AutoSpatialJoinSpec extends AnyFunSuite {
   }
 
   test("FULL OUTER predicate join rewrites: both sides null-extend") {
-    installed()
     val gf = new org.locationtech.jts.geom.GeometryFactory()
     val (pts0, ptRows) = ptsDf(120, 85)
     val pts = pts0.unionByName(
@@ -320,17 +309,15 @@ class AutoSpatialJoinSpec extends AnyFunSuite {
     assert(brute.exists(_._1.isEmpty) && brute.exists(_._2.isEmpty) && matchedPairs.nonEmpty,
       "fixture must exercise matched + both unmatched shapes")
     assert(q.as[(Option[Int], Option[Int])].collect().sorted.toSeq == brute)
-    // parity with Spark's own nested-loop full outer (rule disabled)
-    spark.conf.set(AutoSpatialJoin.EnabledConf, "false")
-    try {
-      val naive = pts.join(boxes, st_intersects(col("ga"), col("gb")), "full")
+    // parity with Spark's own nested-loop full outer (rule excluded)
+    val naive = SparkTestBase.withExcludedRules(Rule) {
+      pts.join(boxes, st_intersects(col("ga"), col("gb")), "full")
         .select("pid", "bid").as[(Option[Int], Option[Int])].collect().sorted.toSeq
-      assert(naive == brute)
-    } finally spark.conf.unset(AutoSpatialJoin.EnabledConf)
+    }
+    assert(naive == brute)
   }
 
   test("ExistenceJoin (IN/EXISTS inside a disjunction) rewrites with a correct flag") {
-    installed()
     GeoFunctions.registerAll(spark)
     val (pts, ptRows) = ptsDf(160, 87)
     val (boxes, boxRows) = boxDf(6, 88)
@@ -370,7 +357,6 @@ class AutoSpatialJoinSpec extends AnyFunSuite {
   }
 
   test("grid stats are memoized: explain + execute + identical re-build = one stats build") {
-    installed()
     val tmp = java.nio.file.Files.createTempDirectory("asj_memo").toString
     ptsDf(120, 95)._1.write.mode("overwrite").parquet(s"$tmp/a")
     boxDf(10, 96)._1.write.mode("overwrite").parquet(s"$tmp/b")
@@ -397,16 +383,15 @@ class AutoSpatialJoinSpec extends AnyFunSuite {
   }
 
   test("guards: conf kill-switch and one-sided/literal conditions stay on Spark's plan") {
-    installed()
+    assert(AutoSpatialJoin.ruleName == Rule)
     val (pts, _) = ptsDf(50, 51)
     val (boxes, _) = boxDf(5, 52)
-    spark.conf.set(AutoSpatialJoin.EnabledConf, "false")
-    try {
+    SparkTestBase.withExcludedRules(Rule) {
       val q = pts.join(boxes, st_intersects(col("ga"), col("gb")))
       val p = q.queryExecution.executedPlan.toString
       assert(p.contains("BroadcastNestedLoopJoin") && !p.contains(AutoSpatialJoin.P),
-        s"disabled rule must leave Spark's plan:\n$p")
-    } finally spark.conf.unset(AutoSpatialJoin.EnabledConf)
+        s"excluded rule must leave Spark's plan:\n$p")
+    }
     val litWkb = Wkb.write(GeomOps.makeBox(0, 0, 50, 50))
     val oneSided = pts.join(boxes, st_intersects(col("ga"), lit(litWkb)))
     val op = oneSided.queryExecution.executedPlan.toString

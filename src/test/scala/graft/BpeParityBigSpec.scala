@@ -1,8 +1,6 @@
 package graft
-import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.Bpe
-class BpeParityBigSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class BpeParityBigSpec extends SparkSuite {
   test("sf0.01 docs corpus: distributed 256-merge sequence == local oracle") {
     val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     val local = Bpe.train(docs, "text", numMerges = 256)

@@ -2,12 +2,10 @@ package graft
 
 import graft.ops.Bpe
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** BPE training against the hand-computable merge sequence of the Sennrich
   * et al. 2016 worked example (low/lower/newest/widest). */
-class BpeSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class BpeSpec extends SparkSuite {
   import spark.implicits._
 
   // corpus with word frequencies low:5 lower:2 newest:6 widest:3

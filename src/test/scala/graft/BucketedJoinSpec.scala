@@ -2,13 +2,11 @@ package graft
 
 import graft.io.Bucketed
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Bucketed co-located joins: both sides stored with matching bucket specs
   * join WITHOUT any Exchange — the repeated corpus⋈side-table shape at
   * 100 TB never re-shuffles the corpus. */
-class BucketedJoinSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class BucketedJoinSpec extends SparkSuite {
   import spark.implicits._
 
   test("matching bucket specs join with zero Exchange; results exact") {

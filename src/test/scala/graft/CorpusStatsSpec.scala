@@ -2,12 +2,10 @@ package graft
 
 import graft.ops.{CorpusStats, Dedup}
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Corpus reporting (rollup report, exact quantiles) and the streaming
   * use of the relational Bloom sketch across micro-batches. */
-class CorpusStatsSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class CorpusStatsSpec extends SparkSuite {
   import spark.implicits._
 
   private lazy val docs = Seq(

@@ -1,13 +1,12 @@
 package graft
 
 import graft.geom.{GeomOps, Wkb}
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Coverage operations (JTS 1.20 coverage pkg) and round-3 tail operators:
   * transform(func), has_m/m, geom_equals_identical, get_precision,
   * polygonize(full), grid_size overlays, line_merge(directed), voronoi
   * extend_to, sample_points(method). */
-class CoverageAndTailSpec extends AnyFunSuite {
+class CoverageAndTailSpec extends SparkSuite {
 
   private def box(x0: Double, y0: Double, x1: Double, y1: Double) =
     GeomOps.makeBox(x0, y0, x1, y1)
@@ -166,7 +165,6 @@ class CoverageAndTailSpec extends AnyFunSuite {
   }
 
   test("dissolve(method=disjoint_subset) matches unary dissolve") {
-    val spark = SparkTestBase.spark
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val df = Seq(
@@ -180,7 +178,6 @@ class CoverageAndTailSpec extends AnyFunSuite {
   }
 
   test("st_polygonize / st_polygonize_full as column ops") {
-    val spark = SparkTestBase.spark
     import spark.implicits._
     import org.apache.spark.sql.functions._
     import graft.functions.GeoFunctions._
@@ -196,7 +193,6 @@ class CoverageAndTailSpec extends AnyFunSuite {
   }
 
   test("CoverageUnionAgg + dissolve(method=coverage) on Spark") {
-    val spark = SparkTestBase.spark
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val df = grid.zipWithIndex.map { case (g, i) => (i % 2, Wkb.write(g)) }.toDF("k", "geometry")
@@ -207,7 +203,6 @@ class CoverageAndTailSpec extends AnyFunSuite {
   }
 
   test("GeoDataFrame.isValidCoverage: distributed per-polygon check, no whole-column collect") {
-    val spark = SparkTestBase.spark
     import spark.implicits._
     // 20x20 grid over several partitions: valid coverage
     val grid = (for (i <- 0 until 20; j <- 0 until 20)
@@ -229,7 +224,6 @@ class CoverageAndTailSpec extends AnyFunSuite {
   }
 
   test("GeoDataFrame.isValidCoverage(by=): every group validated on executors") {
-    val spark = SparkTestBase.spark
     import spark.implicits._
     val ok = (for (i <- 0 until 4; j <- 0 until 4)
       yield ("a", Wkb.write(GeomOps.makeBox(i, j, i + 1, j + 1)))) ++
@@ -240,7 +234,6 @@ class CoverageAndTailSpec extends AnyFunSuite {
   }
 
   test("GeoDataFrame.simplifyCoverage preserves coverage validity and row count") {
-    val spark = SparkTestBase.spark
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val a = Wkb.readWkt("POLYGON ((0 0, 0 10, 5 10, 5.1 7, 4.9 5, 5.1 3, 5 0, 0 0))")
@@ -254,7 +247,6 @@ class CoverageAndTailSpec extends AnyFunSuite {
   }
 
   test("st_astext with rounding precision") {
-    val spark = SparkTestBase.spark
     import spark.implicits._
     import org.apache.spark.sql.functions._
     import graft.functions.GeoFunctions._
@@ -264,7 +256,6 @@ class CoverageAndTailSpec extends AnyFunSuite {
   }
 
   test("GeoDataFrame.transform maps vertices as a column op") {
-    val spark = SparkTestBase.spark
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val df = Seq((1, Wkb.write(GeomOps.point(1, 2)))).toDF("id", "geometry")

@@ -4,10 +4,8 @@ import graft.api.GeoDataFrame
 import graft.functions.GeoFunctions._
 import graft.io.{CsvWkt, GeoIO}
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class CsvWktSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class CsvWktSpec extends SparkSuite {
   import spark.implicits._
 
   test("single-file WKT roundtrip keeps attributes, quoting, and geometry") {

@@ -6,7 +6,6 @@ import graft.ops.{Dedup, Sampling}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Retry determinism, measured instead of argued: the md5-keyed sampler,
   * the banded minhash pair generator and the spatial join all claim
@@ -24,8 +23,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * retries (or repartitions the fixture below 3 partitions) fails loudly
   * instead of vacuously passing.
   */
-class DeterminismSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class DeterminismSpec extends SparkSuite {
   import spark.implicits._
 
   /** Pass-through on the id column that throws on the first attempt of every

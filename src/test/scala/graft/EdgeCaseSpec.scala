@@ -5,13 +5,11 @@ import graft.functions.GeoFunctions._
 import graft.geom.{GeomOps, Wkb}
 import graft.join.{Clip, Overlay, SJoinNearest, SpatialJoin}
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Null, empty and degenerate geometries through every major operator —
   * the failure modes a 100 TB corpus WILL contain (bad rows survive at
   * scale; operators must pass them through or drop them, never throw). */
-class EdgeCaseSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class EdgeCaseSpec extends SparkSuite {
   import spark.implicits._
 
   private val nullG: Option[Array[Byte]] = None

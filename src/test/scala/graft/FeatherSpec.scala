@@ -5,12 +5,10 @@ import graft.functions.GeoFunctions._
 import graft.geom.{GeomOps, Wkb}
 import graft.io.Feather
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Feather V2 (Arrow IPC) round-trips with geo metadata (ref
   * `io/arrow.py:450/812`). */
-class FeatherSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class FeatherSpec extends SparkSuite {
   import spark.implicits._
 
   test("write/read round-trip: typed attributes, WKB geometry, CRS restored") {

@@ -5,7 +5,6 @@ import graft.geom.{GeomOps, Wkb}
 import graft.functions.GeoFunctions.st_astext
 import graft.io.{FlatGeobuf, GeoIO, PackedRTree}
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** FlatGeobuf reader/writer conformance. The reader is validated against a
   * HAND-ASSEMBLED byte-level fixture (vtables and offsets computed by hand
@@ -13,8 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * engine's own builder), then write→read round-trips cover attributes,
   * geometry families, CRS, the packed Hilbert R-tree bbox path, and the
   * distributed per-partition writer. */
-class FlatGeobufSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class FlatGeobufSpec extends SparkSuite {
   import spark.implicits._
 
   private def tmpDir(): String =

@@ -5,10 +5,8 @@ import graft.functions.GeoFunctions._
 import graft.geom.{GeomOps, Wkb}
 import graft.io.GeoParquet
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class GeoParquetSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class GeoParquetSpec extends SparkSuite {
   import spark.implicits._
 
   private def sample = {

@@ -5,10 +5,8 @@ import graft.functions.GeoFunctions._
 import graft.geom.Wkb
 import graft.io.{GeoIO, Gml}
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class GmlSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class GmlSpec extends SparkSuite {
   import spark.implicits._
 
   test("roundtrip preserves typed attributes (via companion .xsd) and geometry") {

@@ -5,14 +5,12 @@ import graft.geom.GeomOps
 import graft.io.Gpkg
 import graft.join.SpatialJoin
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Pure-JVM GeoPackage reader against a spec-built fixture: a 5×5 polygon
   * grid layer + a 400-point layer that includes an SQLite overflow-page row
   * (payload > page size) and a NULL geometry. The reference reads the same
   * format through GDAL (`io/file.py:197-339`, `tests/test_file.py`). */
-class GpkgSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class GpkgSpec extends SparkSuite {
   import spark.implicits._
 
   private val fixture = getClass.getResource("/fixtures/grid.gpkg").getPath

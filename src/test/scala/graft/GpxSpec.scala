@@ -4,10 +4,8 @@ import graft.api.GeoDataFrame
 import graft.functions.GeoFunctions._
 import graft.io.{GeoIO, Gpx}
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class GpxSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class GpxSpec extends SparkSuite {
   import spark.implicits._
 
   test("waypoint roundtrip: known tags, extensions columns, elevation as Z") {

@@ -3,12 +3,10 @@ package graft
 import graft.geom.{GeomOps, Wkb}
 import graft.join.{Gridded, SpatialJoin}
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Pre-gridded bucket-co-located spatial storage: write-once cell layout,
   * zero-Exchange repeated joins, loud spec mismatches. */
-class GriddedSpatialSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class GriddedSpatialSpec extends SparkSuite {
   import spark.implicits._
 
   private def fixtures() = {

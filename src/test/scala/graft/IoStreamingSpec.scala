@@ -6,10 +6,8 @@ import graft.geom.{GeomOps, Wkb}
 import graft.io.GeoJsonIO
 import graft.streaming.StreamingGeo
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class GeoJsonIOSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class GeoJsonIOSpec extends SparkSuite {
   import spark.implicits._
 
   test("ndjson feature write/read roundtrip with properties") {
@@ -118,8 +116,7 @@ class GeoJsonIOSpec extends AnyFunSuite {
   }
 }
 
-class StreamingGeoSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class StreamingGeoSpec extends SparkSuite {
   import spark.implicits._
 
   test("streaming sjoin against static layer (memory sink, rate-like source)") {

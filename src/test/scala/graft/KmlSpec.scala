@@ -5,10 +5,8 @@ import graft.functions.GeoFunctions._
 import graft.geom.Wkb
 import graft.io.{GeoIO, Kml}
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class KmlSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class KmlSpec extends SparkSuite {
   import spark.implicits._
 
   test("roundtrip preserves typed attributes and point geometry") {

@@ -2,10 +2,8 @@ package graft
 
 import graft.ops.LinkGraph
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class LinkGraphSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class LinkGraphSpec extends SparkSuite {
   import spark.implicits._
 
   private def refPageRank(edges: Seq[(Long, Long)], iters: Int, d: Double)

@@ -3,12 +3,10 @@ package graft
 import graft.functions.TextFunctions
 import graft.ops.LmQuality
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Corpus-trained quality signals (unigram-LM NLL, DSIR importance
   * weights) and URL canonicalization. */
-class LmQualitySpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class LmQualitySpec extends SparkSuite {
   import spark.implicits._
 
   test("unigramNllScore: hand-computed NLL on a three-doc corpus") {

@@ -4,10 +4,8 @@ import graft.api.GeoDataFrame
 import graft.functions.GeoFunctions._
 import graft.io.MapInfoMif
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class MapInfoMifSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class MapInfoMifSpec extends SparkSuite {
   import spark.implicits._
 
   test("roundtrip: attribute types, every geometry kind, NONE, CRS header") {

@@ -2,12 +2,10 @@ package graft
 
 import graft.ops.Multimodal
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Real (JDK ImageIO) decode/resize/feature paths over binary media
   * columns, plus the plumbing-only frame sampler. */
-class MultimodalSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class MultimodalSpec extends SparkSuite {
   import spark.implicits._
 
   private def png(w: Int, h: Int, rgb: Int): Array[Byte] = {

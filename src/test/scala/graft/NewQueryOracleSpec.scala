@@ -1,6 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Pre-gate sanity for the round's NEW oracle-gated queries: run each
   * query at sf0.001 and compare (rows, column names, values) against its
@@ -9,8 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the driver's DuckDB compare does. Only ANSI-portable oracles can be
   * checked this way (DuckDB-specific functions like strlen would not
   * parse), which all roundtrip/decode oracles are. */
-class NewQueryOracleSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class NewQueryOracleSpec extends SparkSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
   private val checked = Seq("q75_audio_decode_real", "q76_gml_roundtrip",

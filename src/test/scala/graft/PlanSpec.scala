@@ -3,13 +3,11 @@ package graft
 import graft.functions.GeoFunctions._
 import graft.geom.{GeomOps, Wkb}
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan assertions: the properties that matter at 100 TB —
   * pushdown reaching the scan, native expressions inside whole-stage
   * codegen, broadcast joins where expected. */
-class PlanSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class PlanSpec extends SparkSuite {
   import spark.implicits._
 
   private def writeSample(): String = {
@@ -49,7 +47,6 @@ class PlanSpec extends AnyFunSuite {
 
   test("BboxFastPath rule: .cx over GeoParquet covering column reaches PushedFilters") {
     import graft.api.GeoDataFrame
-    graft.plans.BboxFastPath.install(spark)
     val dir = java.nio.file.Files.createTempDirectory("bboxrule").toString
     val src = GeoDataFrame((0 until 2000).map(i => (i.toLong, (i % 100).toDouble, (i / 100).toDouble))
       .toDF("id", "x", "y").withColumn("geometry", st_point(col("x"), col("y"))).drop("x", "y"))
@@ -63,9 +60,11 @@ class PlanSpec extends AnyFunSuite {
       (plan.contains("bbox.xmin") || plan.contains("LessThanOrEqual(bbox")),
       s"expected bbox conjuncts in PushedFilters:\n${plan.take(2500)}")
     // results identical to the unaccelerated filter
-    val expect = spark.read.parquet(s"$dir/pts")
-      .filter(st_intersects(col("geometry"), lit(Wkb.write(GeomOps.makeBox(10, 2, 30, 8)))))
-      .select("id").as[Long].collect().sorted.toSeq
+    def unaccelerated(pred: org.apache.spark.sql.Column): Seq[Long] =
+      SparkTestBase.withExcludedRules("graft.plans.BboxFastPath") {
+        spark.read.parquet(s"$dir/pts").filter(pred).select("id").as[Long].collect().sorted.toSeq
+      }
+    val expect = unaccelerated(st_intersects(col("geometry"), lit(Wkb.write(GeomOps.makeBox(10, 2, 30, 8)))))
     assert(q.df.select("id").as[Long].collect().sorted.toSeq == expect && expect.nonEmpty)
 
     // contains/within/dwithin literal forms get bounds too, and stay correct
@@ -73,18 +72,14 @@ class PlanSpec extends AnyFunSuite {
     val w = back.df.filter(st_within(col("geometry"), boxLit))
     assert(w.queryExecution.executedPlan.toString.contains("bbox"), "within should gain bbox bounds")
     val wIds = w.select("id").as[Long].collect().sorted.toSeq
-    val wExpect = spark.read.parquet(s"$dir/pts")
-      .filter(st_within(col("geometry"), boxLit)).select("id").as[Long].collect().sorted.toSeq
+    val wExpect = unaccelerated(st_within(col("geometry"), boxLit))
     assert(wIds == wExpect && wIds.nonEmpty)
     val dw = back.df.filter(st_dwithin(col("geometry"), lit(Wkb.write(GeomOps.point(50, 5))), lit(3.0)))
-    val dwExpect = spark.read.parquet(s"$dir/pts")
-      .filter(st_dwithin(col("geometry"), lit(Wkb.write(GeomOps.point(50, 5))), lit(3.0)))
-      .select("id").as[Long].collect().sorted.toSeq
+    val dwExpect = unaccelerated(st_dwithin(col("geometry"), lit(Wkb.write(GeomOps.point(50, 5))), lit(3.0)))
     assert(dw.select("id").as[Long].collect().sorted.toSeq == dwExpect && dwExpect.nonEmpty)
   }
 
   test("BboxFastPath: null bbox with non-null geometry is never dropped") {
-    graft.plans.BboxFastPath.install(spark)
     val dir = java.nio.file.Files.createTempDirectory("bboxnull").toString
     // externally-written layout: spec-shaped covering column, but one row's
     // bbox entry is legally null while its geometry is not

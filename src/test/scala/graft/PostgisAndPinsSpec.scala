@@ -4,12 +4,10 @@ import graft.geom.{GeomOps, Wkb}
 import graft.io.PostgisIO
 import graft.join.{Pins, SpatialJoin}
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** hex-EWKB codec (PostGIS interchange) and the pin-gating logic that keeps
   * 100 TB scan-rooted joins from being materialized to local disk. */
-class PostgisAndPinsSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class PostgisAndPinsSpec extends SparkSuite {
   import spark.implicits._
 
   // POINT(1 2) with SRID=4326, little-endian — canonical PostGIS literal

@@ -875,8 +875,7 @@ class ProjParseSpec extends AnyFunSuite {
 /** End-to-end: toCrs over a frame whose CRS is a full definition with no
   * recoverable EPSG code — the shape a shapefile .prj or GeoParquet PROJJSON
   * arrives in (ref to_crs accepts any pyproj CRS, geoseries.py:1185). */
-class ToCrsParamDrivenSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class ToCrsParamDrivenSpec extends SparkSuite {
   import spark.implicits._
 
   private val esriWktMd =

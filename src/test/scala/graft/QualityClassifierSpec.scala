@@ -2,13 +2,11 @@ package graft
 
 import graft.ops.QualityClassifier
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The corpus-trained logistic-regression quality classifier: first-epoch
   * hand-computation, separation on a synthetic two-class corpus, and
   * build determinism. */
-class QualityClassifierSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class QualityClassifierSpec extends SparkSuite {
   import spark.implicits._
 
   test("first epoch matches the hand-computed gradient step") {

@@ -3,12 +3,10 @@ package graft
 import graft.functions.TextFunctions
 import graft.ops.{Dedup, Retrieval}
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** BM25 retrieval, the relational Bloom filter, and the readability
   * taggers — closed-form fixtures plus plan-shape assertions. */
-class RetrievalSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class RetrievalSpec extends SparkSuite {
   import spark.implicits._
 
   // ------------------------------------------------------------------ BM25

@@ -2,11 +2,9 @@ package graft
 
 import graft.ops.Sampling
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Deterministic sampling + sequence packing for training pipelines. */
-class SamplingSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class SamplingSpec extends SparkSuite {
   import spark.implicits._
 
   private def corpus(n: Int) =

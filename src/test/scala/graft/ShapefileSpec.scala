@@ -5,27 +5,38 @@ import graft.geom.{GeomOps, Wkb}
 import graft.io.Shapefile
 import graft.join.SpatialJoin
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-/** Pure-JVM shapefile reader vs the reference's own fixture corpus
-  * (naturalearth_lowres / naturalearth_cities, the canonical sjoin pairing —
-  * FIXTURES.md §2-3, ref tests/util.py:18-21). */
-class ShapefileSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+/** Pure-JVM shapefile reader vs generated fixtures standing in for the
+  * reference's corpus (naturalearth_lowres / naturalearth_cities, the
+  * canonical sjoin pairing, and nybb — FIXTURES.md §1-3, ref
+  * tests/util.py:17-21). [[ShapefileFixtures]] writes them byte by byte;
+  * every expectation is derived from its definitions. */
+class ShapefileSpec extends SparkSuite {
   import spark.implicits._
+  import ShapefileFixtures.{cities => cityRows, countries => countryRows}
 
-  private val lowres = "/root/reference/geopandas/tests/data/naturalearth_lowres/naturalearth_lowres.shp"
-  private val cities = "/root/reference/geopandas/tests/data/naturalearth_cities/naturalearth_cities.shp"
+  private def lowres = ShapefileFixtures.countriesPath
+  private def cities = ShapefileFixtures.citiesPath
 
-  test("naturalearth_lowres: 177 countries, schema, valid polygons, lon/lat bounds") {
+  /** Country names whose fixture geometry intersects `g` (JTS on the
+    * definitions, not on anything read back). */
+  private def countriesHitting(g: org.locationtech.jts.geom.Geometry): Set[String] =
+    countryRows.filter(c => ShapefileFixtures.geometry(c).intersects(g)).map(_.name).toSet
+
+  test("countries layer: schema, valid polygons, lon/lat bounds") {
     val gdf = Shapefile.read(spark, lowres)
     val df = gdf.df.cache()
-    assert(df.count() == 177)
+    assert(df.count() == countryRows.size)
+    assert(countryRows.size == 12 * 7 + 2)
     assert(df.columns.toSet == Set("pop_est", "continent", "name", "iso_a3", "gdp_md_est", "geometry"))
+    assert(df.schema("pop_est").dataType == org.apache.spark.sql.types.DoubleType)
     assert(df.filter(col("geometry").isNull).count() == 0)
-    // all polygonal, valid coordinates within lon/lat
+    // all polygonal, valid coordinates within lon/lat; the two-part
+    // countries read back as MultiPolygons
     val kinds = df.select(st_geometrytype(col("geometry"))).distinct().as[String].collect().toSet
-    assert(kinds.subsetOf(Set("Polygon", "MultiPolygon")))
+    assert(kinds == Set("Polygon", "MultiPolygon"))
+    val multi = df.filter(st_geometrytype(col("geometry")) === "MultiPolygon").count()
+    assert(multi == countryRows.count(_.parts.size > 1))
     val b = df.select(min(st_x(st_centroid(col("geometry")))), max(st_x(st_centroid(col("geometry")))))
       .as[(Double, Double)].head()
     assert(b._1 >= -180 && b._2 <= 180)
@@ -36,9 +47,9 @@ class ShapefileSpec extends AnyFunSuite {
       gdf.crs.getOrElse("geometry", "").contains("WGS84") || gdf.crs.getOrElse("geometry", "").contains("WGS_1984"))
   }
 
-  test("naturalearth_cities: 243 points") {
+  test("cities layer: one point per city") {
     val df = Shapefile.read(spark, cities).df
-    assert(df.count() == 243)
+    assert(df.count() == cityRows.size)
     assert(df.columns.toSet == Set("name", "geometry"))
     val kinds = df.select(st_geometrytype(col("geometry"))).distinct().as[String].collect().toSet
     assert(kinds == Set("Point"))
@@ -48,8 +59,11 @@ class ShapefileSpec extends AnyFunSuite {
     val countries = Shapefile.read(spark, lowres).df.select(col("name").as("country"), col("geometry"))
     val cap = Shapefile.read(spark, cities).df.select(col("name").as("city"), col("geometry"))
     val joined = SpatialJoin.sjoin(cap, countries, predicate = "intersects", how = "inner")
+    // every capital lies in exactly one country; the equator cities in none
     val n = joined.count()
-    assert(n >= 200 && n <= 260, s"expected most capitals inside a country, got $n")
+    assert(n == cityRows.count(c => countryRows.exists(k =>
+      ShapefileFixtures.geometry(k).intersects(ShapefileFixtures.point(c)))))
+    assert(n == countryRows.size)
     val paris = joined.filter(col("city") === "Paris").select("country").as[String].collect()
     assert(paris.toSeq == Seq("France"))
   }
@@ -59,7 +73,7 @@ class ShapefileSpec extends AnyFunSuite {
     val countries = Shapefile.read(spark, lowres).df.select(col("continent"), col("pop_est"), col("geometry"))
     val dissolved = GeoDataFrame(countries)
       .dissolve(by = Seq("continent"), aggfunc = Map("pop_est" -> "sum")).df
-    assert(dissolved.count() == 8)
+    assert(dissolved.count() == countryRows.map(_.continent).distinct.size)
     // dissolved area ~ sum of parts (union of disjoint country polygons)
     val (partArea, disArea) = (
       countries.select(sum(st_area(col("geometry")))).as[Double].head(),
@@ -69,7 +83,7 @@ class ShapefileSpec extends AnyFunSuite {
 
   test("nybb_16a.zip: the reference's canonical dissolve fixture (5 boroughs, EPSG:2263)") {
     import graft.api.GeoDataFrame
-    val gdf = Shapefile.read(spark, "/root/reference/geopandas/tests/data/nybb_16a.zip")
+    val gdf = Shapefile.read(spark, ShapefileFixtures.nybbZip)
     val df = gdf.df.cache()
     assert(df.count() == 5)
     assert(df.columns.toSet == Set("BoroCode", "BoroName", "Shape_Leng", "Shape_Area", "geometry"))
@@ -86,10 +100,11 @@ class ShapefileSpec extends AnyFunSuite {
     val a0 = df.select(sum(st_area(col("geometry")))).as[Double].head()
     val a1 = dissolved.select(sum(st_area(col("geometry")))).as[Double].head()
     assert(math.abs(a0 - a1) / a0 < 1e-9)
-    // Shape_Area attribute roughly matches computed geometry area (ftUS^2)
+    // Shape_Area attribute matches computed geometry area (ftUS^2)
     val (attr, geom) = df.select(sum(col("Shape_Area")), sum(st_area(col("geometry"))))
       .as[(Double, Double)].head()
-    assert(math.abs(attr - geom) / attr < 0.01)
+    assert(math.abs(attr - geom) / attr < 1e-9)
+    assert(geom == ShapefileFixtures.boroughs.map(_.area).sum)
   }
 
   test("read_file pushdown args: bbox, columns, rows") {
@@ -98,6 +113,7 @@ class ShapefileSpec extends AnyFunSuite {
       columns = Some(Seq("name", "continent")))
     val names = eu.df.select("name").as[String].collect().toSet
     assert(names.contains("France") && !names.contains("Australia"))
+    assert(names == countriesHitting(GeomOps.makeBox(-10, 40, 10, 55)))
     assert(eu.df.columns.toSet == Set("name", "continent", "geometry"))
     val limited = Shapefile.read(spark, lowres, rows = Some(5))
     assert(limited.df.count() == 5)
@@ -108,7 +124,8 @@ class ShapefileSpec extends AnyFunSuite {
       .select("name").as[String].collect().toSet
     val posthoc = Shapefile.read(spark, lowres).df
       .filter(col("continent") === "Africa").select("name").as[String].collect().toSet
-    assert(viaWhere == posthoc && viaWhere.size > 40)
+    assert(viaWhere == posthoc)
+    assert(viaWhere == countryRows.filter(_.continent == "Africa").map(_.name).toSet)
     // composes: where may reference a column that columns= then prunes away
     val both = Shapefile.read(spark, lowres, bbox = Some((-10.0, 40.0, 10.0, 55.0)),
       where = Some("pop_est > 10000000"), columns = Some(Seq("name")))
@@ -164,7 +181,7 @@ class ShapefileSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("shpw").toString
     Shapefile.write(gdf, s"$dir/out.shp")
     val back = Shapefile.read(spark, s"$dir/out.shp")
-    assert(back.df.count() == 177)
+    assert(back.df.count() == countryRows.size)
     assert(back.df.columns.toSet == gdf.df.columns.toSet)
     assert(back.crs.get("geometry").exists(_.contains("WGS")))
     val a0 = gdf.df.select(sum(st_area(col("geometry")))).as[Double].head()
@@ -202,7 +219,7 @@ class ShapefileSpec extends AnyFunSuite {
     assert(parts.count(_.endsWith(".prj")) == parts.count(_.endsWith(".shp")))
     // the directory reads back as one layer corpus
     val back = Shapefile.read(spark, dir)
-    assert(back.df.count() == 177)
+    assert(back.df.count() == countryRows.size)
     assert(back.crs.get("geometry").exists(_.contains("WGS")))
     val a0 = gdf.df.select(sum(st_area(col("geometry")))).as[Double].head()
     val a1 = back.df.select(sum(st_area(col("geometry")))).as[Double].head()
@@ -243,6 +260,9 @@ class ShapefileSpec extends AnyFunSuite {
       .filter(st_intersects(col("geometry"), lit(mwkb)))
       .select("name").as[String].collect().toSet
     assert(masked == posthoc && masked.contains("France"))
+    assert(masked == countriesHitting(tri))
+    // the Faroe Islands sit inside the mask's envelope but outside the mask
+    assert(countriesHitting(tri.getEnvelope) -- masked == Set("Faroe Islands"))
     intercept[IllegalArgumentException](
       Shapefile.read(spark, lowres, bbox = Some((0.0, 0.0, 1.0, 1.0)), mask = Some(mwkb)))
     // same mask semantics on the GeoJSON and GeoParquet readers
@@ -263,8 +283,8 @@ class ShapefileSpec extends AnyFunSuite {
     // Shapefile.read stores the raw .prj WKT as CRS; area/buffer must not
     // crash on a non-EPSG CRS string (ref array.py:435-446 only warns)
     val gdf = Shapefile.read(spark, lowres)
-    assert(gdf.area.count() == 177)        // would NumberFormatException before the fix
-    assert(gdf.buffer(0.1).df.count() == 177)
+    assert(gdf.area.count() == countryRows.size) // would NumberFormatException before the fix
+    assert(gdf.buffer(0.1).df.count() == countryRows.size)
     // the lowres .prj is geographic WKT — the detector should see it
     assert(graft.crs.CrsTransform.isGeographic(gdf.crs("geometry")))
     // sjoin CRS check is also tolerant of WKT-vs-WKT frames
@@ -274,7 +294,7 @@ class ShapefileSpec extends AnyFunSuite {
 
   test("toCrs works directly on shapefile-read frames (ESRI WKT name resolution)") {
     import org.locationtech.jts.geom.Coordinate
-    // lowres .prj is ESRI GEOGCS["GCS_WGS_1984",...] with no AUTHORITY —
+    // the countries .prj is ESRI GEOGCS["GCS_WGS_1984",...] with no AUTHORITY —
     // name-based resolution maps it to 4326 so reprojection just works
     val fr = Shapefile.read(spark, lowres).df.filter(col("name") === "France")
     val gdf = Shapefile.read(spark, lowres).copy(df = fr)
@@ -295,11 +315,13 @@ class ShapefileSpec extends AnyFunSuite {
     import graft.api.GeoDataFrame
     val gdf = Shapefile.read(spark, cities)
     val all = gdf.cx(None, None, None, None).df.count()
-    assert(all == 243)
+    assert(all == cityRows.size)
     val north = gdf.cx(None, Some(0.0), None, None).df.count()
     val south = gdf.cx(None, None, None, Some(0.0)).df.count()
-    assert(north > 0 && south > 0 && north + south >= 243) // equator points in both
-    assert(north < 243 && south < 243)
+    // the equator cities count on both sides
+    assert(north == cityRows.count(_.y >= 0) && south == cityRows.count(_.y <= 0))
+    assert(north + south == all + cityRows.count(_.y == 0) && cityRows.exists(_.y == 0))
+    assert(north < all && south < all)
   }
 
   test("write raises on mixed geometry-type frames instead of corrupting") {
@@ -331,16 +353,17 @@ class ShapefileSpec extends AnyFunSuite {
   }
 
   test("polygon holes: ring orientation assembly preserves area (vs envelope)") {
-    // South Africa contains Lesotho as a hole in naturalearth_lowres
+    // South Africa contains Lesotho as a hole, as in naturalearth_lowres
     val za = Shapefile.read(spark, lowres).df.filter(col("name") === "South Africa")
     val (area, envArea) = za.select(st_area(col("geometry")), st_area(st_envelope(col("geometry"))))
       .as[(Double, Double)].head()
-    assert(area > 0 && area < envArea)
+    val shell = ShapefileFixtures.cell(6, 1)
+    assert(envArea == shell.area && area == shell.area - ShapefileFixtures.lesothoHole.area)
     val wkb = za.select("geometry").as[Array[Byte]].head()
     val g = graft.geom.Wkb.read(wkb)
     val nHoles = (0 until g.getNumGeometries).map(i =>
       g.getGeometryN(i).asInstanceOf[org.locationtech.jts.geom.Polygon].getNumInteriorRing).sum
-    assert(nHoles >= 1, "South Africa should contain the Lesotho hole")
+    assert(nHoles == 1, "South Africa should contain the Lesotho hole")
   }
 
   test("Shapefile.write refuses an over-cap frame instead of collecting it") {

@@ -5,14 +5,12 @@ import graft.geom.{GeomOps, Wkb}
 import graft.join.{Overlay, SJoinNearest, SpatialJoin}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Join-layer semantics, including the reference's overlay golden fixture:
   * df1 = squares (0,0,2,2),(2,2,4,4); df2 = squares (1,1,3,3),(3,3,5,5)
   * (`tools/overlay.py:224-229`, expectations
   * `tests/data/overlay/polys/df1_df2-*.geojson`). */
-class SpatialJoinSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class SpatialJoinSpec extends SparkSuite {
   import spark.implicits._
 
   private def squares(name: String, boxes: (Double, Double, Double, Double)*): DataFrame =
@@ -183,6 +181,32 @@ class SpatialJoinSpec extends AnyFunSuite {
     val pts = points((1, 1))
     for (_ <- 1 to 3) SpatialJoin.sjoin(pts, polys, "intersects", "inner").count()
     assert(graft.join.BroadcastTreeCache.size <= 64)
+  }
+
+  test("broadcast tree cache: broadcast id 0 of two SparkContexts does not alias") {
+    import graft.join.BroadcastTreeCache
+    // broadcast ids restart at 0 with each SparkContext in one JVM; the key
+    // carries the context, so the second context builds its own tree
+    val (a, b) = (BroadcastTreeCache.Key(-2L, 0L), BroadcastTreeCache.Key(-3L, 0L))
+    val rowsA = Array(1L -> Wkb.write(GeomOps.makeBox(0, 0, 1, 1)))
+    val rowsB = Array(2L -> Wkb.write(GeomOps.makeBox(10, 10, 11, 11)))
+    val ia = BroadcastTreeCache.get(a, rowsA)
+    val ib = BroadcastTreeCache.get(b, rowsB)
+    assert(ia ne ib)
+    assert(ia.ids.toSeq == Seq(1L) && ib.ids.toSeq == Seq(2L))
+    val probe = GeomOps.point(10.5, 10.5).getEnvelopeInternal
+    assert(ia.tree.query(probe).isEmpty && ib.tree.query(probe).size == 1)
+    // a hit returns the cached tree without touching the rows
+    assert(BroadcastTreeCache.get(a, throw new AssertionError("rows re-read on a hit")) eq ia)
+    // keys from the live context are stable per broadcast and differ by id
+    val sc = spark.sparkContext
+    val (bc1, bc2) = (sc.broadcast(0), sc.broadcast(1))
+    try {
+      assert(BroadcastTreeCache.key(sc, bc1) == BroadcastTreeCache.key(sc, bc1))
+      assert(BroadcastTreeCache.key(sc, bc1).context == BroadcastTreeCache.key(sc, bc2).context)
+      assert(BroadcastTreeCache.key(sc, bc1) != BroadcastTreeCache.key(sc, bc2))
+      assert(BroadcastTreeCache.key(sc, bc1).context > 0)
+    } finally { bc1.destroy(); bc2.destroy() }
   }
 
   test("sjoin_nearest how=right: nearest left for each right row, right geometry kept") {

@@ -2,11 +2,9 @@ package graft
 
 import graft.functions.{GeoFunctions, TextFunctions}
 import graft.agg.GeoAggregates
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The SQL surface: every registered function callable from spark.sql. */
-class SqlRegistrationSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class SqlRegistrationSpec extends SparkSuite {
 
   test("st_* functions and aggregates work through SQL") {
     GeoFunctions.registerAll(spark)
@@ -33,7 +31,6 @@ class SqlRegistrationSpec extends AnyFunSuite {
 
   test("SQL strings get the native expressions and GeomSimplify fusions") {
     GeoFunctions.registerAll(spark)
-    graft.plans.GeomSimplify.install(spark)
     spark.range(5).createOrReplaceTempView("sqlfuse")
     // integer arguments on purpose: the native builders must cast (a UDF
     // would have coerced silently; the raw expression would ClassCastException)

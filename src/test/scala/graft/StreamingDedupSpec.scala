@@ -3,10 +3,8 @@ package graft
 import graft.geom.{GeomOps, Wkb}
 import graft.streaming.StreamingDedup
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class StreamingDedupSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class StreamingDedupSpec extends SparkSuite {
   import spark.implicits._
 
   test("streaming exact dedup drops repeated content within the watermark") {

@@ -3,10 +3,8 @@ package graft
 import graft.ops.TemporalJoin
 import graft.streaming.StreamingTemporal
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class StreamingTemporalSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class StreamingTemporalSpec extends SparkSuite {
   import spark.implicits._
 
   private val Static = Seq(

@@ -4,10 +4,8 @@ import graft.ops.TemporalJoin
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class TemporalJoinSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class TemporalJoinSpec extends SparkSuite {
   import spark.implicits._
 
   // ---- brute-force references ------------------------------------------

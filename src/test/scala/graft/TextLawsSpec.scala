@@ -4,13 +4,11 @@ import graft.functions.TextFunctions
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Law-style invariants for the text-pipeline Column functions, evaluated
   * through the real Spark execution path over generated inputs (one
   * DataFrame pass — scalacheck supplies the strings, Spark the engine). */
-class TextLawsSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class TextLawsSpec extends SparkSuite {
   import spark.implicits._
 
   private val genString: Gen[String] = {

@@ -3,12 +3,10 @@ package graft
 import graft.functions.TextFunctions
 import graft.ops.Dedup
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Training-pipeline text operators: normalization, PII redaction,
   * repetition (Gopher-style) line stats, benchmark decontamination. */
-class TextPipelineSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class TextPipelineSpec extends SparkSuite {
   import spark.implicits._
 
   test("compressionRatio: repetitive < prose < high-entropy; edge cases pinned") {

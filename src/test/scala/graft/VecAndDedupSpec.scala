@@ -3,13 +3,11 @@ package graft
 import graft.ops.{Dedup, Similarity}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Vector kernels (VecDot/VecNorm), multi-table embedding LSH recall, the
   * fast-minhash path, and the indexed ANN path (stored bucket column with a
   * pushed scan filter). */
-class VecAndDedupSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class VecAndDedupSpec extends SparkSuite {
   import spark.implicits._
 
   private val sf = "/root/testdata/sf0.001"

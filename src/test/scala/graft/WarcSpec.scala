@@ -2,12 +2,10 @@ package graft
 
 import graft.io.Warc
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** WARC reader against HAND-WRITTEN record bytes (independent of our own
   * writer), gzip multi-member decode, and the partitioned export. */
-class WarcSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class WarcSpec extends SparkSuite {
   import spark.implicits._
 
   private def rec(tpe: String, uri: String, ctype: String, payload: String): String = {

@@ -2,10 +2,8 @@ package graft
 
 import graft.functions.ZOrder
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class ZOrderSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class ZOrderSpec extends SparkSuite {
   import spark.implicits._
 
   private def refZ2(x: Long, y: Long, bits: Int): Long =

@@ -4,7 +4,6 @@ import graft.api.GeoDataFrame
 import graft.functions.GeoFunctions._
 import graft.io._
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Measured (XYZM) geometries only became representable in the geometry
   * column in round 10 — `Wkb.write` previously dropped M on the first
@@ -25,8 +24,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * its OGR writers degrade exactly like this (ref `base.py:843` has_m;
   * `io/file.py:614` to_file delegating dimension handling to each driver).
   */
-class ZmFormatsSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class ZmFormatsSpec extends SparkSuite {
   import spark.implicits._
 
   private val pointZm = "POINT ZM (1 2 3 4)"

@@ -1,17 +1,15 @@
 package graft.io
 
-import graft.SparkTestBase
+import graft.SparkSuite
 import graft.api.GeoDataFrame
 import graft.geom.GeomOps
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** to_file append mode (reference `mode="a"`, io/file.py:614-794): GPKG
   * appends into the existing feature table with max-fid rowid continuation,
   * line-delimited GeoJSON appends part files, GeoParquet appends with
   * merged sidecar metadata; single-document exports raise loudly. */
-class AppendModeSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class AppendModeSpec extends SparkSuite {
   import spark.implicits._
 
   private def pts(ids: Range): GeoDataFrame = {

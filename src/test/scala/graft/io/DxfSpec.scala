@@ -1,16 +1,14 @@
 package graft.io
 
-import graft.SparkTestBase
+import graft.SparkSuite
 import graft.api.GeoDataFrame
 import graft.functions.GeoFunctions._
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** DXF driver against HAND-WRITTEN R12 entity text (independent of our own
   * writer), closed-form bulge/arc checks, the write round-trip, and the
   * loud-raise posture for out-of-subset entities and attribute columns. */
-class DxfSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class DxfSpec extends SparkSuite {
   import spark.implicits._
 
   private def writeFixture(dir: String, name: String, body: String): String = {

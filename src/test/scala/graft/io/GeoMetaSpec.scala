@@ -1,16 +1,14 @@
 package graft.io
 
-import graft.SparkTestBase
+import graft.SparkSuite
 import graft.api.GeoDataFrame
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Dimension metadata the containers declare alongside the payload:
   * gpkg_geometry_columns z/m flags and GeoParquet geometry_types " Z"
   * suffixes. External conformance readers trust these over the blobs, so a
   * ZM payload under z=0/m=0 (what we wrote before round 10) is a spec
   * violation even though our own reader ignored the flags. */
-class GeoMetaSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class GeoMetaSpec extends SparkSuite {
   import spark.implicits._
 
   private def gdf(wkts: (Long, String)*): GeoDataFrame = {

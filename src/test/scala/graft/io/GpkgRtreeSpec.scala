@@ -1,9 +1,8 @@
 package graft.io
 
-import graft.SparkTestBase
+import graft.SparkSuite
 import graft.api.GeoDataFrame
 import graft.geom.GeomOps
-import org.scalatest.funsuite.AnyFunSuite
 
 /** gpkg_rtree_index extension on write (GPKG spec Annex F.3): the writer
   * bulk-packs a SQLite R-tree over the feature envelopes. GDAL's writer
@@ -11,8 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * default, and QGIS/ogr expect it for non-trivial layers. Validated both
   * structurally (our own page reader) and against a REAL sqlite3 binary:
   * PRAGMA integrity_check walks rtree shadow tables since SQLite 3.29. */
-class GpkgRtreeSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
+class GpkgRtreeSpec extends SparkSuite {
   import spark.implicits._
 
   private def writeLayer(n: Int): String = {
